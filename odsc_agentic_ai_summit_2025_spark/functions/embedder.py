@@ -21,8 +21,9 @@ matter:
   twin (``char_poly_hash_sql``) — so the whole embed→kNN pipeline is
   oracle-checkable (plans/extended.py Q51_SQL), unlike the previous
   ``xxhash64`` variant whose hash exists only inside Spark.
-- The exact same expression embeds a 100 TB corpus and a single query
-  row, so query/document vectors agree bit-for-bit by construction.
+- One kernel (``densify``) embeds a 100 TB corpus through ``embed``
+  and a single query string on the driver through ``embed_text``, so
+  query/document vectors agree bit-for-bit by construction.
 - All arithmetic that feeds the L2 norm is exact-integer-in-double
   (±1 sums, squares of integers), so the normalization divisor is
   bit-identical in any engine and under any partition order.
@@ -49,6 +50,61 @@ TOKEN_PATTERN = r"[a-z0-9]+"
 
 def tokens(col: Column) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
+
+
+def densify(flat_tokens, lengths, dim: int):
+    """The embedding kernel: token lists → (rows, dim) float64 matrix
+    of L2-normalized hash vectors. ``flat_tokens`` is every row's
+    tokens concatenated as one pyarrow string array, ``lengths`` the
+    token count per row. :func:`embed` runs it per Arrow batch and
+    :func:`embed_text` on the driver, so document and query vectors
+    come from one code path.
+
+    Arrow-native end to end (guide §4.2): the rolling char hash folds
+    straight over the flattened string buffer
+    (char_poly_hash_arrow — value-identical to the pandas path's
+    char_poly_hash_np by property test), and one ``np.bincount``
+    (composite key row·dim + bucket) scatter-adds every token of
+    every row at once.
+    """
+    import numpy as np
+
+    from .text import char_poly_hash_arrow
+
+    n = len(lengths)
+    if lengths.sum():
+        flat_h = char_poly_hash_arrow(flat_tokens)
+        flat_b = flat_h % dim
+        # (h - h%dim)/dim is an exact integer; parity of it picks the
+        # sign — same math as the oracle CTE
+        flat_s = ((flat_h // dim) % 2) * 2.0 - 1.0
+        row_idx = np.repeat(np.arange(n, dtype=np.int64), lengths)
+        v = np.bincount(
+            row_idx * dim + flat_b, weights=flat_s, minlength=n * dim
+        ).reshape(n, dim)
+    else:
+        v = np.zeros((n, dim))
+    nrm = np.sqrt((v * v).sum(axis=1, keepdims=True))
+    np.divide(v, nrm, out=v, where=nrm > 0)
+    return v
+
+
+def embed_text(text: str, dim: int = DEFAULT_DIM) -> list[float]:
+    """:func:`embed` of one string, computed on the driver with no
+    Spark job: the query side of a search. Tokenizes with the
+    driver-side twin of :func:`tokens` (``fts.normalize_query_terms``)
+    and runs the same :func:`densify` kernel, so the vector is
+    bit-identical to ``embed`` over a one-row frame (property-tested).
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    from ..operators.fts import normalize_query_terms
+
+    terms = normalize_query_terms(text)
+    return densify(
+        pa.array(terms, pa.string()), np.array([len(terms)]), dim
+    )[0].tolist()
 
 
 def embed(
@@ -109,45 +165,20 @@ def embed(
         + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
     )
 
-    def densify(batches):
-        # Arrow-native end to end (guide §4.2): the token-list column
-        # flattens to ONE contiguous string buffer (+ lengths), the
-        # rolling char hash folds straight over those bytes
-        # (char_poly_hash_arrow — value-identical to the pandas path's
-        # char_poly_hash_np by property test), and every OTHER input
-        # column passes through zero-copy instead of round-tripping
-        # through pandas object cells (the text column is the widest
-        # thing in the batch and was paying that toll for nothing).
-        import numpy as np
-
+    def kernel(batches):
         from ..functions import arrowkit as ak
-        from ..functions.text import char_poly_hash_arrow
 
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
+            # every other input column passes through zero-copy
             ti = b.schema.get_field_index("_t")
-            flat, lengths = ak.flat_with_lengths(b.column(ti))
-            if lengths.sum():
-                flat_h = char_poly_hash_arrow(flat)
-                flat_b = flat_h % dim
-                # (h - h%dim)/dim is an exact integer; parity of it
-                # picks the sign — same math as the oracle CTE
-                flat_s = ((flat_h // dim) % 2) * 2.0 - 1.0
-                row_idx = np.repeat(np.arange(n, dtype=np.int64), lengths)
-                v = np.bincount(
-                    row_idx * dim + flat_b, weights=flat_s, minlength=n * dim
-                ).reshape(n, dim)
-            else:
-                v = np.zeros((n, dim))
-            nrm = np.sqrt((v * v).sum(axis=1, keepdims=True))
-            np.divide(v, nrm, out=v, where=nrm > 0)
+            v = densify(*ak.flat_with_lengths(b.column(ti)), dim)
             yield b.remove_column(ti).append_column(
                 out_col, ak.list_f64(v)
             )
 
-    return with_contrib.mapInArrow(densify, out_schema)
+    return with_contrib.mapInArrow(kernel, out_schema)
 
 
 def embed_sql_vector_cte(

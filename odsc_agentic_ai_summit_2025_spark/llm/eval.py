@@ -104,8 +104,14 @@ def field_map() -> dict[str, tuple[Column, Column, object]]:
         ),
         "immunizationCount": (e("immunization"), g("immunization"), _count_eq),
         "immunizationDate": (
-            F.element_at(e("immunization"), 1)["occurrenceDateTime"],
-            F.element_at(g("immunization"), 1)["occurrenceDateTime"],
+            # try_: an empty list has no first date (null), where
+            # ANSI element_at would fail the whole report
+            F.try_element_at(e("immunization"), F.lit(1))[
+                "occurrenceDateTime"
+            ],
+            F.try_element_at(g("immunization"), F.lit(1))[
+                "occurrenceDateTime"
+            ],
             # first-date membership (eval.py:547-553): extracted first
             # date must appear in gold's date (date-prefix match covers
             # gold timestamps vs extracted dates)

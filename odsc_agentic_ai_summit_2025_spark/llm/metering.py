@@ -260,6 +260,23 @@ class SpanTracer:
 
         return _Ctx()
 
+    def bind(self, fn):
+        """``fn`` wrapped to run under the calling thread's open spans,
+        whichever thread calls it: a worker thread that runs part of a
+        request records its spans as children of the request's (the
+        per-thread stacks would otherwise give them no parent)."""
+        outer = tuple(self._stack())
+
+        def run(*args: Any, **kwargs: Any) -> Any:
+            saved = self._stack()
+            self._local.stack = list(outer)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                self._local.stack = saved
+
+        return run
+
     @property
     def spans(self) -> list[Span]:
         with self._lock:

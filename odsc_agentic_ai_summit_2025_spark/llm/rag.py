@@ -13,10 +13,18 @@ Driver-side orchestration around Spark-built artifacts:
 7. output guardrail                                     rag_obs_eval.py:357-379
 
 Steps 2-4/6 are one LLM round-trip each (driver-side, injectable
-client); 5a/5b are Spark jobs. The reference runs 5a/5b as concurrent
-asyncio tasks; submitting the two Spark actions sequentially computes
-the same result (latency overlap is a serving concern, and both
-branches read only precomputed artifacts).
+client); 5a/5b are Spark jobs. As in the reference (concurrent asyncio
+tasks), 5a and 5b overlap: the vector branch runs on a
+``pyspark.InheritableThread`` while the graph branch runs on the
+calling thread. They share only read-only artifacts and the client
+(whose usage collector is locked), so the overlap changes latency, not
+answers. The worker
+inherits the caller's Spark local properties, so every job of an ask
+carries the caller's job group (``cancelJobGroup`` and per-group
+status counters cover both branches), and its spans nest under
+``ask``. The query vector is computed on the driver
+(``embedder.embed_text``) and enters the kNN as a literal one-row
+relation, so the vector branch starts no embedding job.
 """
 
 from __future__ import annotations
@@ -24,12 +32,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
 from ..functions import guardrails
-from ..functions.embedder import embed, DEFAULT_DIM
+from ..functions.embedder import DEFAULT_DIM, embed, embed_text
 from ..functions.schema_xml import fhir_graph_schema_xml
 from ..operators import fts, rrf
 from ..operators import similarity as sim
@@ -107,6 +116,15 @@ class HybridRag:
             tokenizer=fts.normalized_tokens,
         )
 
+    def release(self) -> None:
+        """Drop the cached retrieval artifacts (embedded notes, FTS
+        index) and any memoized trails views. They recompute on next
+        use."""
+        cache.release_frame(self.notes)
+        self.fts_index.release()
+        cache.release(*(trails for trails, _ in self._trail_views.values()))
+        self._trail_views.clear()
+
     # -- graph star patterns (Cypher `-[*1..4]-`, rag.py graph branch) -----
     def _materialize_trail_views(self, sql: str, max_hops: int = 4) -> None:
         """The text2sql surface for Cypher variable-length patterns:
@@ -159,13 +177,15 @@ class HybridRag:
         query_text = " ".join(e["value"] for e in entities)
         terms = fts.normalize_query_terms(query_text)
         bm = fts.bm25_topk_indexed(self.fts_index, terms, k=20)
-        qdf = embed(
-            self.spark.createDataFrame(
-                [(0, query_text)], "qid long, q string"
-            ),
-            "q",
-            "vector",
-            self.dim,
+        # a one-row LOCAL relation of literals: collecting it
+        # (knn_bruteforce's query gather) runs no Spark job and no
+        # Python worker ("SELECT 0L" alone is a OneRowRelation scan,
+        # which still runs a job)
+        qdf = self.spark.sql("SELECT * FROM VALUES (0L) AS q(qid)").select(
+            "qid",
+            F.array(
+                *[F.lit(x) for x in embed_text(query_text, self.dim)]
+            ).alias("vector"),
         )
         vec = sim.knn_bruteforce(
             self.notes, qdf, "vector", "record_id", "qid", k=20,
@@ -179,6 +199,53 @@ class HybridRag:
         return fused.join(
             self.notes.select("record_id", "note"), "record_id"
         ).orderBy("rrf_rank")
+
+    def _graph_branch(
+        self, q: str, pruned: str, entities: list[dict[str, str]]
+    ) -> tuple[str, list[tuple], str]:
+        """5a: generated SQL over the registered views → (sql, rows,
+        graph answer)."""
+        with self.tracer.span("graph_branch"):
+            sql = self.client.text2sql(q, pruned, entities)
+            graph_rows: list[tuple] = []
+            try:
+                self._materialize_trail_views(sql)
+                graph_rows = [
+                    tuple(r) for r in self.spark.sql(sql).collect()
+                ]
+            except FrontierExplosionError as e:
+                # hub-guard refusal: the generated star pattern would
+                # explode on this graph — fail fast with the clear
+                # message, keep serving the vector branch (graph side
+                # degrades like bad SQL)
+                self.graph_refusals.append(str(e))
+                return sql, graph_rows, ""
+            except Exception:
+                # bad generated SQL ≡ reference's Q10 failure mode.
+                # ONLY the SQL execution is guarded: a client failure
+                # in answer() below is a transport error that must
+                # surface, not be misclassified as bad SQL and silently
+                # discard correct graph rows.
+                return sql, graph_rows, ""
+            graph_answer = self.client.answer(
+                q,
+                "; ".join(
+                    ", ".join(str(v) for v in row) for row in graph_rows
+                ),
+            )
+        return sql, graph_rows, graph_answer
+
+    def _vector_branch(
+        self, q: str, entities: list[dict[str, str]]
+    ) -> tuple[list[int], str]:
+        """5b: hybrid top-k context → (context ids, vector answer)."""
+        with self.tracer.span("vector_branch"):
+            hits = self._vector_context(entities).collect()
+            vec_context = "\n\n".join(r["note"] for r in hits)
+            return (
+                [int(r["record_id"]) for r in hits],
+                self.client.answer(q, vec_context),
+            )
 
     def ask(self, question: str) -> HybridRagAnswer:
         with self.tracer.span("ask"):
@@ -197,46 +264,28 @@ class HybridRag:
             with self.tracer.span("extract_entities"):
                 entities = self.client.extract_entity_keywords(q, pruned)
 
-            # 5a. graph branch: generated SQL over the registered views
-            with self.tracer.span("graph_branch"):
-                sql = self.client.text2sql(q, pruned, entities)
-                graph_rows: list[tuple] = []
-                graph_answer = ""
-                sql_ok = True
-                try:
-                    self._materialize_trail_views(sql)
-                    graph_rows = [
-                        tuple(r) for r in self.spark.sql(sql).collect()
-                    ]
-                except FrontierExplosionError as e:
-                    # hub-guard refusal: the generated star pattern
-                    # would explode on this graph — fail fast with
-                    # the clear message, keep serving the vector
-                    # branch (graph side degrades like bad SQL)
-                    self.graph_refusals.append(str(e))
-                    sql_ok = False
-                except Exception:
-                    # bad generated SQL ≡ reference's Q10 failure mode.
-                    # ONLY the SQL execution is guarded: a client
-                    # failure in answer() below is a transport error
-                    # that must surface, not be misclassified as bad
-                    # SQL and silently discard correct graph rows.
-                    sql_ok = False
-                if sql_ok:
-                    graph_answer = self.client.answer(
-                        q,
-                        "; ".join(
-                            ", ".join(str(v) for v in row)
-                            for row in graph_rows
-                        ),
-                    )
+            # 5a ‖ 5b: the vector branch on a worker thread, the graph
+            # branch here. The worker is always joined; its exception
+            # (if any) is re-raised here as is.
+            vector: dict = {}
 
-            # 5b. vector branch: hybrid top-k context → answer
-            with self.tracer.span("vector_branch"):
-                hits = self._vector_context(entities).collect()
-                context_ids = [int(r["record_id"]) for r in hits]
-                vec_context = "\n\n".join(r["note"] for r in hits)
-                vector_answer = self.client.answer(q, vec_context)
+            def vector_branch() -> None:
+                try:
+                    vector["out"] = self._vector_branch(q, entities)
+                except BaseException as e:  # re-raised by the caller
+                    vector["err"] = e
+
+            worker = InheritableThread(target=self.tracer.bind(vector_branch))
+            worker.start()
+            try:
+                sql, graph_rows, graph_answer = self._graph_branch(
+                    q, pruned, entities
+                )
+            finally:
+                worker.join()
+            if "err" in vector:
+                raise vector["err"]
+            context_ids, vector_answer = vector["out"]
 
             # 6. synthesis + 7. output guardrail (traced)
             with self.tracer.span("synthesize"):

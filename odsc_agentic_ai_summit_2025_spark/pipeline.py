@@ -34,6 +34,8 @@ class RagPipeline:
     rag: object  # llm.rag.HybridRag — call .ask(question)
     collector: object | None  # metering.UsageCollector when metered
     tracer: object  # metering.SpanTracer
+    # True when the pipeline ran (and cached) the extraction itself
+    owns_extracted: bool = False
 
     def usage_df(self, spark: SparkSession):
         if self.collector is None:
@@ -42,6 +44,20 @@ class RagPipeline:
 
     def spans_df(self, spark: SparkSession):
         return self.tracer.to_df(spark)
+
+    def release(self) -> None:
+        """Drop the caches this pipeline holds: the extraction cache
+        (when the pipeline ran the extraction), the embedded notes and
+        the FTS index. Every frame stays usable — they are all
+        ``cache()``-backed, so a later ask recomputes them (including
+        the LLM extraction). A session building pipelines in a loop
+        calls this once per pipeline, or executor memory accumulates;
+        mirrors ``CurationPipeline.release``."""
+        from .cache import release_frame
+
+        if self.owns_extracted:
+            release_frame(self.extracted)
+        self.rag.release()
 
 
 def build_rag_pipeline(
@@ -62,8 +78,13 @@ def build_rag_pipeline(
     object. Both default to the deterministic mock. ``extracted``
     short-circuits the extraction stage when the records already
     exist (the reference's idempotent re-ingest of
-    extracted_fhir.json); extraction stays lazy either way — the
-    graph build materializes it exactly once.
+    extracted_fhir.json). Extraction stays lazy: the build runs no
+    action on it. The extraction this function runs is marked
+    ``cache()``, so the first question that reads the graph views
+    materializes it (one set of LLM calls per note) and every later
+    question reads the cached records; a caller-supplied
+    ``extracted`` is used as given. ``RagPipeline.release`` drops the
+    pipeline's caches.
     """
     from .llm.client import MockLLMClient
     from .llm.extract import extract_fhir, guarded_extract_fhir
@@ -76,10 +97,11 @@ def build_rag_pipeline(
     collector = UsageCollector() if meter else None
     tracer = SpanTracer()
 
+    owns_extracted = extracted is None
     with tracer.span("extract"):
-        if extracted is None:
+        if owns_extracted:
             runner = guarded_extract_fhir if guard_input else extract_fhir
-            extracted = runner(notes, client_factory=client_factory)
+            extracted = runner(notes, client_factory=client_factory).cache()
     with tracer.span("build_graph"):
         graph = build_graph(extracted)
     with tracer.span("build_rag"):
@@ -98,6 +120,7 @@ def build_rag_pipeline(
         rag=rag,
         collector=collector,
         tracer=tracer,
+        owns_extracted=owns_extracted,
     )
 
 

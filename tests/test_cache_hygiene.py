@@ -322,3 +322,25 @@ def test_q47_release_returns_block_census_to_baseline(spark, sf_dir):
     assert jsc.getPersistentRDDs().size() > base  # the IVF assignment
     release(out)
     assert jsc.getPersistentRDDs().size() == base
+
+
+def test_rag_pipeline_release_returns_block_census_to_baseline(
+    spark, rag_notes_df
+):
+    """build → ask → release: the extraction cache, the embedded notes
+    and the FTS index all go, and the pipeline still answers after."""
+    from odsc_agentic_ai_summit_2025_spark.pipeline import build_rag_pipeline
+
+    question = (
+        "How many patients were born in between the years 1990 and 2000?"
+    )
+    baseline = _clean_baseline(spark)
+    pipe = build_rag_pipeline(spark, rag_notes_df)
+    answer = pipe.rag.ask(question)
+    assert pipe.extracted.storageLevel.useMemory
+    assert _n_blocks(spark) > baseline
+    pipe.release()
+    assert not pipe.extracted.storageLevel.useMemory
+    assert _n_blocks(spark) == baseline
+    assert pipe.rag.ask(question).final_answer == answer.final_answer
+    pipe.release()

@@ -96,13 +96,76 @@ def test_field_accuracy_report(spark, notes_df, gold_df):
     assert 0.95 <= acc <= 1.0
 
 
-def test_field_accuracy_identity(spark, gold_df):
-    """gold vs gold must be 100% on every field — comparator sanity."""
-    from odsc_agentic_ai_summit_2025_spark.llm.eval import field_accuracy
+# gold records covering each compared branch: full and year-only
+# birth dates, null and present optional structs, abbreviated and full
+# state names, immunizations with and without a tz offset
+_GOLD_RECORDS = [
+    {
+        "record_id": 1,
+        "name": {"family": "Batz", "given": ["Rosa", "Ivy"], "prefix": "Ms."},
+        "age": 26, "gender": "Female", "birthDate": "1999-04-18",
+        "address": {"line": "12 Elm Street", "city": "Boston",
+                    "state": "MA", "postalCode": "02111", "country": "US"},
+        "phone": "555-201-0001", "email": "rosa.batz@example.com",
+        "maritalStatus": "Never Married", "primaryLanguage": "English",
+        "allergy": {"substance": [
+            {"category": "food", "name": "shellfish",
+             "manifestation": ["hives"]},
+        ]},
+        "immunization": [
+            {"traits": ["seasonal influenza"], "status": "completed",
+             "occurrenceDateTime": "2022-03-03T09:30:00+01:00"},
+            {"traits": ["MMR"], "status": None,
+             "occurrenceDateTime": "2021-06-09T14:05:00Z"},
+        ],
+        "practitioner": {
+            "name": {"family": "Klein", "given": ["Josef"], "prefix": "Dr."},
+            "address": None, "phone": None, "email": None,
+        },
+    },
+    {
+        "record_id": 2,
+        "name": {"family": "Hansen", "given": ["Clara"], "prefix": None},
+        "age": None, "gender": None, "birthDate": "1994",
+        "address": {"line": "77 Lake Street", "city": "Albany",
+                    "state": "New York", "postalCode": "12207",
+                    "country": "US"},
+        "phone": None, "email": None, "maritalStatus": None,
+        "primaryLanguage": None, "allergy": None, "immunization": None,
+        "practitioner": None,
+    },
+    {
+        "record_id": 3,
+        "name": {"family": "Kuhn", "given": ["Owen"], "prefix": "Mr."},
+        "age": 57, "gender": "Male", "birthDate": "1967-12-05",
+        "address": None, "phone": "555-201-0003", "email": None,
+        "maritalStatus": "Married", "primaryLanguage": "Spanish",
+        "allergy": {"substance": []}, "immunization": [],
+        "practitioner": {
+            "name": {"family": "Fritsch", "given": ["Arla"], "prefix": "Dr."},
+            "address": {"line": "1 Main Street", "city": "Hartford",
+                        "state": "CT", "postalCode": "06103",
+                        "country": "US"},
+            "phone": None, "email": None,
+        },
+    },
+]
 
-    report = field_accuracy(gold_df, gold_df)
-    bad = report.filter(F.col("matches") != F.col("total")).collect()
+
+def test_field_accuracy_identity(spark):
+    """gold vs gold must be 100% on every field — comparator sanity."""
+    from odsc_agentic_ai_summit_2025_spark.llm.eval import (
+        field_accuracy,
+        field_map,
+    )
+    from odsc_agentic_ai_summit_2025_spark.schemas import EXTRACTED_FHIR
+
+    gold = spark.createDataFrame(_GOLD_RECORDS, EXTRACTED_FHIR)
+    report = field_accuracy(gold, gold).collect()
+    assert {r["field"] for r in report} == set(field_map())
+    bad = [r for r in report if r["matches"] != r["total"]]
     assert bad == [], bad
+    assert all(r["total"] == len(_GOLD_RECORDS) for r in report)
 
 
 # ---------------------------------------------------------------------------
@@ -270,6 +333,57 @@ def test_hybrid_rag_guardrail_masks_question(spark, notes_df, gold_df):
     assert ans.guardrail_action == "WARN"
     assert "bob.smith@corp.com" not in ans.masked_question
     assert "b***h@corp.com" in ans.masked_question
+
+
+def test_rag_pipeline_extracts_once_and_answers_repeat(spark, rag_notes_df):
+    """The pipeline's extraction is cached on first read: across
+    several asks each note costs exactly its three extraction calls
+    (patient, practitioner, immunizations), none at build time, and a
+    repeated question gets the identical answer."""
+    from odsc_agentic_ai_summit_2025_spark.llm.client import MockLLMClient
+    from odsc_agentic_ai_summit_2025_spark.pipeline import build_rag_pipeline
+    from odsc_agentic_ai_summit_2025_spark.plans.golden import GOLDEN_CASES
+
+    calls = spark.sparkContext.accumulator(0)
+
+    class CountingClient(MockLLMClient):
+        def extract_patient(self, note):
+            calls.add(1)
+            return super().extract_patient(note)
+
+        def extract_practitioner(self, note):
+            calls.add(1)
+            return super().extract_practitioner(note)
+
+        def extract_immunizations(self, note):
+            calls.add(1)
+            return super().extract_immunizations(note)
+
+    pipe = build_rag_pipeline(
+        spark, rag_notes_df, client_factory=CountingClient
+    )
+    try:
+        assert calls.value == 0
+        questions = [
+            GOLDEN_CASES[3].question,  # allergy categories
+            GOLDEN_CASES[4].question,  # birth-year range count
+            "Which patient is named Clara Hansen?",
+        ]
+        first = [pipe.rag.ask(q) for q in questions]
+        again = [pipe.rag.ask(q) for q in questions]
+        assert calls.value == 3 * rag_notes_df.count()
+        for a, b in zip(first, again):
+            assert a.graph_rows
+            assert len(a.context_ids) == 2
+            assert (a.final_answer, a.graph_rows, a.context_ids) == (
+                b.final_answer, b.graph_rows, b.context_ids
+            )
+        assert set(first[0].final_answer.split("; ")) == {
+            "food", "medication", "environment"
+        }
+        assert first[1].final_answer == "3"  # born 1999, 1994, 1990
+    finally:
+        pipe.release()
 
 
 def test_mask_emails_short_locals_fully_masked(spark):

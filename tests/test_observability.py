@@ -398,3 +398,95 @@ def test_build_rag_pipeline_end_to_end(spark):
     assert p.usage_df(spark).count() >= 5
     names = {s.name for s in p.tracer.spans}
     assert {"extract", "build_graph", "build_rag", "ask"} <= names
+
+
+# ---------------------------------------------------------------------------
+# HybridRag.ask under concurrency: the vector branch runs on a worker
+# thread while the graph branch runs on the caller's
+# ---------------------------------------------------------------------------
+
+_CATEGORIES_Q = (
+    "What are the unique categories of substances patients are allergic to?"
+)
+
+
+@pytest.fixture(scope="module")
+def inline_pipeline(spark, rag_notes_df):
+    from odsc_agentic_ai_summit_2025_spark.pipeline import build_rag_pipeline
+
+    pipe = build_rag_pipeline(spark, rag_notes_df)
+    yield pipe
+    pipe.release()
+
+
+def test_rag_worker_branch_spans_nest_under_ask(inline_pipeline):
+    tracer = inline_pipeline.tracer
+    n0 = len(tracer.spans)
+    inline_pipeline.rag.ask(_CATEGORIES_Q)
+    spans = {s.name: s for s in tracer.spans[n0:]}
+    assert spans["vector_branch"].parent == "ask"
+    assert spans["graph_branch"].parent == "ask"
+    assert spans["ask"].parent is None
+
+
+def test_rag_jobs_of_both_branches_carry_callers_job_group(
+    spark, inline_pipeline
+):
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("rag-ask", "ask")
+    try:
+        inline_pipeline.rag.ask(_CATEGORIES_Q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert st.getJobIdsForGroup("rag-ask")
+    # a worker thread that dropped the caller's local properties would
+    # run the vector branch's jobs with no group
+    assert set(st.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_rag_ask_joins_vector_branch_when_graph_branch_raises(
+    inline_pipeline, monkeypatch
+):
+    import threading
+    import time
+
+    from pyspark import InheritableThread
+
+    rag = inline_pipeline.rag
+    finished = threading.Event()
+    vector_branch = rag._vector_branch
+
+    def slow_vector_branch(q, entities):
+        time.sleep(0.5)
+        out = vector_branch(q, entities)
+        finished.set()
+        return out
+
+    def failing_graph_branch(q, pruned, entities):
+        raise RuntimeError("graph side failed")
+
+    monkeypatch.setattr(rag, "_vector_branch", slow_vector_branch)
+    monkeypatch.setattr(rag, "_graph_branch", failing_graph_branch)
+    with pytest.raises(RuntimeError, match="graph side failed"):
+        rag.ask(_CATEGORIES_Q)
+    assert finished.is_set()
+    assert not [
+        t for t in threading.enumerate() if isinstance(t, InheritableThread)
+    ]
+
+
+def test_rag_ask_reraises_vector_branch_exception_unchanged(
+    inline_pipeline, monkeypatch
+):
+    rag = inline_pipeline.rag
+    err = LookupError("vector side failed")
+
+    def failing_vector_branch(q, entities):
+        raise err
+
+    monkeypatch.setattr(rag, "_vector_branch", failing_vector_branch)
+    with pytest.raises(LookupError) as info:
+        rag.ask(_CATEGORIES_Q)
+    assert info.value is err

@@ -9,7 +9,7 @@ fixed testdata, this covers the input space around it.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SETTINGS = dict(
@@ -204,6 +204,37 @@ def test_embed_kernel_matches_oracle_math(spark, toks):
     nrm = math.sqrt(sum(x * x for x in v))
     want = [x / nrm if nrm > 0 else 0.0 for x in v]
     assert got == want
+
+
+@settings(**SETTINGS)
+@given(text=st.one_of(
+    st.text(max_size=80),  # arbitrary Unicode
+    st.text(alphabet=" .,;:!?-'\"()[]/\\\t\n", max_size=20),
+    st.text(alphabet="aZ09", min_size=200, max_size=400),  # long tokens
+))
+@example(text="")
+@example(text="?!... -- ;;")
+# case mappings Python and Java might disagree on: Kelvin sign, dotted
+# capital I, Angstrom sign, sharp s, final sigma
+@example(text="\u212aelvin \u0130stanbul \u00dcn\u00efc\u00f6d\u00e9 "
+              "\u212b \u00df \u03a3\u03c3")
+@example(text="x" * 1000)
+def test_embed_text_matches_embed_bit_for_bit(spark, text):
+    """The driver-side query embedding must equal ``embed`` over a
+    one-row frame of the same string, bit for bit: document and query
+    vectors meet in one cosine, so any drift in lowercasing,
+    tokenization or the kernel would silently reorder retrieval."""
+    import numpy as np
+
+    from odsc_agentic_ai_summit_2025_spark.functions.embedder import (
+        embed,
+        embed_text,
+    )
+
+    df = spark.createDataFrame([(0, text)], "qid long, q string")
+    [row] = embed(df, "q", "vector").collect()
+    got = np.array(embed_text(text), dtype=np.float64)
+    assert got.tobytes() == np.array(row["vector"], dtype=np.float64).tobytes()
 
 
 graph_strategy = st.lists(
