@@ -13,30 +13,39 @@ Driver-side orchestration around Spark-built artifacts:
 7. output guardrail                                     rag_obs_eval.py:357-379
 
 Steps 2-4/6 are one LLM round-trip each (driver-side, injectable
-client); 5a/5b are Spark jobs. As in the reference (concurrent asyncio
-tasks), 5a and 5b overlap: the vector branch runs on a
-``pyspark.InheritableThread`` while the graph branch runs on the
-calling thread. They share only read-only artifacts and the client
-(whose usage collector is locked), so the overlap changes latency, not
-answers. The worker
-inherits the caller's Spark local properties, so every job of an ask
-carries the caller's job group (``cancelJobGroup`` and per-group
-status counters cover both branches), and its spans nest under
-``ask``. The query vector is computed on the driver
-(``embedder.embed_text``) and enters the kNN as a literal one-row
-relation, so the vector branch starts no embedding job.
+client). 5a is a Spark job over the graph views. 5b is served on the
+driver, as PAPER §0 splits the work: the batch half (embedding, FTS
+postings) runs on Spark once per :class:`HybridRag`, in one job whose
+collect becomes a :class:`NotesIndex`, and every question's BM25
+top-20, cosine top-20 and RRF run over that snapshot in numpy, with no
+Spark job and no broadcast. The snapshot evaluates the Spark
+operators' own kernels (``fts.bm25_weight``, ``sim.cosine_topk``,
+``rrf.rrf_term``) in the same order, so it ranks exactly like
+``bm25_topk_indexed`` + ``knn_bruteforce`` + ``rrf_fuse``, which stay
+the batch and at-scale path (plans/retrieval.py) and the test
+reference. As in the reference (concurrent asyncio tasks), 5a and 5b
+overlap: the vector branch runs on a ``pyspark.InheritableThread``
+while the graph branch runs on the calling thread, because with a real
+client its ``answer`` call takes seconds. They share only read-only
+artifacts and the client (whose usage collector is locked), so the
+overlap changes latency, not answers. The worker inherits the
+caller's Spark local properties, so every job of an ask carries the
+caller's job group, and its spans nest under ``ask``.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
+from ..functions import arrowkit as ak
 from ..functions import guardrails
 from ..functions.embedder import DEFAULT_DIM, embed, embed_text
 from ..functions.schema_xml import fhir_graph_schema_xml
@@ -61,9 +70,115 @@ class HybridRagAnswer:
     context_ids: list[int] = field(default_factory=list)
 
 
+@dataclass(frozen=True)
+class NotesIndex:
+    """Driver-held snapshot of the Spark-built retrieval index over
+    the notes: the embedding matrix and the FTS postings, in record id
+    order, from one Spark job (:meth:`build`). Serves hybrid top-k
+    queries (:meth:`search`) in numpy with no Spark job."""
+
+    ids: np.ndarray  # record ids, ascending; a doc's position is its row
+    notes: list[str]  # note text by position
+    matrix: np.ndarray  # (docs, dim) unit rows (sim.unit_rows)
+    vocab: dict[str, int]  # term -> postings slot
+    offsets: np.ndarray  # slot j's postings are [offsets[j], offsets[j+1])
+    post_doc: np.ndarray  # doc positions, ascending within a slot
+    post_tf: np.ndarray  # term frequency of each posting
+    dl: np.ndarray  # doc lengths in tokens, by position
+    avgdl: float
+    dim: int
+
+    @classmethod
+    def build(cls, notes: DataFrame, dim: int = DEFAULT_DIM) -> NotesIndex:
+        """One Spark job: ``embed`` and ``fts.normalized_tokens`` over
+        notes[record_id, note], collected. N and avgdl follow
+        ``fts.build_fts_index`` (integer total / count)."""
+        t = (
+            embed(notes.select("record_id", "note"), "note", "vector", dim)
+            .select(
+                "record_id", "note", "vector",
+                fts.normalized_tokens(F.col("note")).alias("terms"),
+            )
+            .toArrow()
+            .sort_by("record_id")
+        )
+        n = t.num_rows
+        if n == 0:
+            raise ValueError("cannot build an FTS index over an empty corpus")
+        flat, dl = ak.flat_with_lengths(t.column("terms"))
+        enc = flat.dictionary_encode()
+        # one posting per distinct (term, doc): sorted by term slot,
+        # then doc position
+        key, tf = np.unique(
+            enc.indices.to_numpy().astype(np.int64) * n
+            + np.repeat(np.arange(n, dtype=np.int64), dl),
+            return_counts=True,
+        )
+        terms = enc.dictionary.to_pylist()
+        return cls(
+            ids=ak.i64(t.column("record_id")),
+            notes=t.column("note").to_pylist(),
+            matrix=sim.unit_rows(ak.fixed_matrix(t.column("vector"))),
+            vocab={term: j for j, term in enumerate(terms)},
+            offsets=np.searchsorted(key // n, np.arange(len(terms) + 1)),
+            post_doc=key % n,
+            post_tf=tf,
+            dl=dl,
+            avgdl=int(dl.sum()) / n,
+            dim=dim,
+        )
+
+    def bm25_topk(self, terms: list[str], k: int) -> np.ndarray:
+        """Positions of the top-k docs by BM25, as
+        ``fts.bm25_topk_indexed`` ranks them: a doc's term weights
+        summed in term order, then (score desc, id asc)."""
+        n = len(self.ids)
+        score = np.zeros(n)
+        hit = np.zeros(n, dtype=bool)
+        for term, qtf in sorted(Counter(terms).items()):
+            j = self.vocab.get(term)
+            if j is None:
+                continue
+            lo, hi = self.offsets[j], self.offsets[j + 1]
+            pos = self.post_doc[lo:hi]
+            score[pos] += fts.bm25_weight(
+                self.post_tf[lo:hi], int(hi - lo), self.dl[pos], qtf,
+                float(n), self.avgdl, fts.strict_log,
+            )
+            hit[pos] = True
+        cand = np.flatnonzero(hit)
+        return cand[np.lexsort((cand, -score[cand]))[:k]]
+
+    def cosine_topk(self, text: str, k: int) -> np.ndarray:
+        """Positions of the top-k docs by cosine to ``text``'s
+        embedding, as ``knn_bruteforce`` ranks them."""
+        query = sim.unit_rows(np.asarray([embed_text(text, self.dim)]))
+        _, top, _ = sim.cosine_topk(
+            np.arange(len(self.ids)), self.matrix, np.zeros(1, np.int64),
+            query, k, exclude_self=False,
+        )
+        return top
+
+    def search(self, text: str, top_k: int) -> list[int]:
+        """Positions of the RRF top_k over BM25 top-20 and cosine
+        top-20 (the reference's hybrid search, rag.py:83-96).
+        Positions ascend with record ids, so every position tie-break
+        is the id tie-break of the Spark operators."""
+        return rrf.fuse_ranked(
+            [
+                self.bm25_topk(fts.normalize_query_terms(text), 20).tolist(),
+                self.cosine_topk(text, 20).tolist(),
+            ],
+            top_k,
+        )
+
+
 class HybridRag:
-    """Holds the precomputed artifacts (graph views + note/vector
-    tables) and answers questions through the 7-step path."""
+    """Holds the precomputed artifacts (graph views + the
+    :class:`NotesIndex` snapshot) and answers questions through the
+    7-step path. Retrieval is served on the driver over the
+    Spark-built snapshot (PAPER §0), so an instance holds no executor
+    blocks."""
 
     def __init__(
         self,
@@ -102,26 +217,18 @@ class HybridRag:
         self.dim = dim
         self.schema_xml = fhir_graph_schema_xml(graph)
         graph.register(spark)
-        # S8: embed-on-insert as an explicit column op; cache both
-        # retrieval artifacts — they serve every question.
-        self.notes = embed(notes, "note", "vector", dim).cache()
-        # FTS index built ONCE (generate_note_embeddings.py:49); every
-        # ask() only scores its own query-term slice. Index and query
-        # share ONE normalization (lowercase alnum runs) — a raw
-        # whitespace index is case/punctuation-sensitive, so lowercased
-        # query terms would miss capitalized entity terms ('Rosenbaum')
-        # and hybrid retrieval silently degrades to vector-only.
-        self.fts_index = fts.build_fts_index(
-            self.notes, "note", "record_id", cache=True,
-            tokenizer=fts.normalized_tokens,
-        )
+        # S8: embed-on-insert as an explicit column op. The embedding
+        # and the FTS index are built once (generate_note_embeddings.py:49)
+        # in one Spark job and held on the driver. Index and query share
+        # ONE normalization (lowercase alnum runs) — a raw whitespace
+        # index is case/punctuation-sensitive, so lowercased query terms
+        # would miss capitalized entity terms ('Rosenbaum') and hybrid
+        # retrieval silently degrades to vector-only.
+        self.index = NotesIndex.build(notes, dim)
 
     def release(self) -> None:
-        """Drop the cached retrieval artifacts (embedded notes, FTS
-        index) and any memoized trails views. They recompute on next
-        use."""
-        cache.release_frame(self.notes)
-        self.fts_index.release()
+        """Drop the memoized trails views. The retrieval snapshot is
+        driver memory and holds no executor blocks."""
         cache.release(*(trails for trails, _ in self._trail_views.values()))
         self._trail_views.clear()
 
@@ -172,34 +279,6 @@ class HybridRag:
                 cache.release(memo[0])
             self._trail_views[name] = (trails, max_hops)
 
-    # -- vector branch (rag.py:83-96) --------------------------------------
-    def _vector_context(self, entities: list[dict[str, str]]) -> DataFrame:
-        query_text = " ".join(e["value"] for e in entities)
-        terms = fts.normalize_query_terms(query_text)
-        bm = fts.bm25_topk_indexed(self.fts_index, terms, k=20)
-        # a one-row LOCAL relation of literals: collecting it
-        # (knn_bruteforce's query gather) runs no Spark job and no
-        # Python worker ("SELECT 0L" alone is a OneRowRelation scan,
-        # which still runs a job)
-        qdf = self.spark.sql("SELECT * FROM VALUES (0L) AS q(qid)").select(
-            "qid",
-            F.array(
-                *[F.lit(x) for x in embed_text(query_text, self.dim)]
-            ).alias("vector"),
-        )
-        vec = sim.knn_bruteforce(
-            self.notes, qdf, "vector", "record_id", "qid", k=20,
-            exclude_self=False,  # query id domain is disjoint from record_ids
-        ).select(F.col("n_id").alias("record_id"), "rank")
-        fused = rrf.rrf_fuse(
-            [bm.withColumnRenamed("doc_id", "record_id"), vec],
-            id_col="record_id",
-            top_k=self.top_k,
-        )
-        return fused.join(
-            self.notes.select("record_id", "note"), "record_id"
-        ).orderBy("rrf_rank")
-
     def _graph_branch(
         self, q: str, pruned: str, entities: list[dict[str, str]]
     ) -> tuple[str, list[tuple], str]:
@@ -238,12 +317,15 @@ class HybridRag:
     def _vector_branch(
         self, q: str, entities: list[dict[str, str]]
     ) -> tuple[list[int], str]:
-        """5b: hybrid top-k context → (context ids, vector answer)."""
+        """5b (rag.py:83-96): hybrid top-k context → (context ids,
+        vector answer)."""
         with self.tracer.span("vector_branch"):
-            hits = self._vector_context(entities).collect()
-            vec_context = "\n\n".join(r["note"] for r in hits)
+            hits = self.index.search(
+                " ".join(e["value"] for e in entities), self.top_k
+            )
+            vec_context = "\n\n".join(self.index.notes[p] for p in hits)
             return (
-                [int(r["record_id"]) for r in hits],
+                [int(self.index.ids[p]) for p in hits],
                 self.client.answer(q, vec_context),
             )
 

@@ -19,6 +19,8 @@ against doc stats — broadcast the term slice, never the postings.
 
 from __future__ import annotations
 
+import math
+import struct
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -31,6 +33,88 @@ K1 = 1.2
 B = 0.75
 
 Tokenizer = Callable[[Column], Column]
+
+
+def bm25_weight(tf, df, dl, qtf, n_docs: float, avgdl: float, log,
+                k1: float = K1, b: float = B):
+    """One query term's BM25 contribution to one doc,
+    idf · tf(k1+1) / (tf + k1(1-b+b·dl/avgdl)) · qtf. Written once for
+    both evaluators: :func:`bm25_scores_indexed` passes Spark Columns
+    and ``F.log``, the driver-side index in ``llm/rag.py`` passes numpy
+    arrays and :func:`strict_log`. Every step is one IEEE operation on
+    the same operands in the same order, so both score bit-for-bit
+    alike."""
+    idf = log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+    tf_norm = (tf * (k1 + 1)) / (tf + k1 * ((1 - b) + b * dl / avgdl))
+    return idf * tf_norm * qtf
+
+
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_TWO54 = 1.80143985094819840000e+16
+_LG1, _LG2, _LG3, _LG4, _LG5, _LG6, _LG7 = (
+    6.666666666666735130e-01, 3.999999999940941908e-01,
+    2.857142874366239149e-01, 2.222219843214978396e-01,
+    1.818357216161805012e-01, 1.531383769920937332e-01,
+    1.479819860511658591e-01,
+)
+
+
+def _words(x: float) -> tuple[int, int]:
+    """(signed high word, low word) of a double."""
+    bits = struct.unpack("<q", struct.pack("<d", x))[0]
+    return bits >> 32, bits & 0xFFFFFFFF
+
+
+def strict_log(x: float) -> float:
+    """Natural log, bit-identical to the JVM's ``StrictMath.log``
+    (fdlibm ``e_log.c``), which Spark's ``log`` evaluates. The C
+    library's ``math.log`` differs from it in the last bit on about 6%
+    of BM25 idf arguments, and one ulp of idf is enough to reorder two
+    docs whose scores tie in exact arithmetic."""
+    hx, lx = _words(x)
+    k = 0
+    if hx < 0x00100000:  # x < 2**-1022
+        if (hx & 0x7FFFFFFF) | lx == 0:
+            return -math.inf
+        if hx < 0:
+            return math.nan
+        k -= 54  # subnormal: scale up
+        x *= _TWO54
+        hx, lx = _words(x)
+    if hx >= 0x7FF00000:
+        return x + x
+    k += (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    # normalize x or x/2 into [sqrt(2)/2, sqrt(2))
+    x = struct.unpack(
+        "<d", struct.pack("<Q", ((hx | (i ^ 0x3FF00000)) << 32) | lx)
+    )[0]
+    k += i >> 20
+    f = x - 1.0
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        if k == 0:
+            return f - r
+        return dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    r = t2 + t1
+    if ((hx - 0x6147A) | (0x6B851 - hx)) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
 
 
 def normalized_tokens(col: Column) -> Column:
@@ -197,18 +281,27 @@ def bm25_scores_indexed(
         )
         .join(dls, "doc")
     )
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
+    term_score = bm25_weight(
+        F.col("tf"), F.col("df"), F.col("dl"), qtf, float(n_docs), avgdl,
+        F.log, k1, b,
     )
-    tf_norm = (F.col("tf") * F.lit(k1 + 1)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
+    # a doc's term scores are summed in term order. A plain sum() adds
+    # them in shuffle-arrival order, which depends on partitioning:
+    # exact-duplicate docs matching three or more query terms then
+    # scored a few ulps apart (23 of 30 random small corpora) and
+    # ranked by that noise instead of by doc id
     return (
-        hit.withColumn("term_score", idf * tf_norm * qtf)
-        .groupBy("doc")
-        .agg(F.sum("term_score").alias("score"))
+        hit.groupBy("doc")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("term", term_score.alias("s")))
+            ).alias("_ts")
+        )
+        .select(
+            "doc",
+            F.aggregate("_ts", F.lit(0.0), lambda acc, t: acc + t["s"])
+            .alias("score"),
+        )
     )
 
 

@@ -19,6 +19,24 @@ from pyspark.sql import functions as F
 RRF_K = 60
 
 
+def rrf_term(rank, k: int = RRF_K):
+    """One ranking's contribution to a doc's score, 1/(k + rank):
+    a Spark Column in :func:`rrf_fuse`, an int in :func:`fuse_ranked`."""
+    return 1.0 / (k + rank)
+
+
+def fuse_ranked(rankings: list[list[int]], top_k: int) -> list[int]:
+    """Driver twin of :func:`rrf_fuse` over ranked id lists (rank =
+    position + 1): the same terms added in the same ranking order
+    (an absent ranking's 0.0 is an exact no-op), the same (score desc,
+    id asc) order. Returns the top_k fused ids, best first."""
+    score: dict[int, float] = {}
+    for ranking in rankings:
+        for rank, doc in enumerate(ranking, 1):
+            score[doc] = score.get(doc, 0.0) + rrf_term(rank)
+    return sorted(score, key=lambda d: (-score[d], d))[:top_k]
+
+
 def rrf_fuse(
     rankings: list[DataFrame],
     id_col: str = "doc_id",
@@ -42,8 +60,7 @@ def rrf_fuse(
     score = None
     for i in range(len(rankings)):
         term = F.when(
-            F.col(f"rank_{i}").isNotNull(),
-            F.lit(1.0) / (F.lit(k) + F.col(f"rank_{i}")),
+            F.col(f"rank_{i}").isNotNull(), rrf_term(F.col(f"rank_{i}"), k)
         ).otherwise(F.lit(0.0))
         score = term if score is None else score + term
     out = fused.withColumn("rrf_score", score)

@@ -681,6 +681,66 @@ def neardup_pairs_lsh(
     return own(pairs.mapInArrow(verify, "a_id long, b_id long"), df, bands)
 
 
+def unit_rows(m):
+    """Rows of ``m`` scaled to unit L2 norm (zero rows stay zero): the
+    one normalization :func:`knn_bruteforce` applies to queries and
+    corpus batches, and the driver-side index in ``llm/rag.py`` to its
+    matrix."""
+    import numpy as np
+
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
+
+
+def cosine_topk(n_id, nv, q_ids, q_mat, k: int, exclude_self: bool):
+    """Exact top-k of unit rows ``nv`` (ids ``n_id``) for each unit
+    query row of ``q_mat`` (ids ``q_ids``), ordered by (-cos, n_id).
+    Returns (q_id, n_id, cos) arrays. The kernel of
+    :func:`knn_bruteforce`, run per Arrow batch there and over the whole
+    matrix by the driver-side index in ``llm/rag.py``: the top k of a
+    total order is the top k of the per-batch top ks, so both rank
+    alike."""
+    import numpy as np
+
+    # einsum (no BLAS dispatch), NOT `nv @ q_mat.T`: BLAS routes
+    # single-row batches through dgemv, whose reduction order differs
+    # from dgemm's by a last-ulp rounding — so the same (neighbor,
+    # query) pair scored in different partition layouts produced
+    # unequal cos bits, and the id tie-break below silently became
+    # partition-dependent (r13: eleven singleton partitions each
+    # scored an exact-duplicate at 1.0+2e-16 and outranked ids 1..3).
+    # einsum's fixed ascending-d loop makes cos a pure function of the
+    # two vectors; query sets here are small, so the non-BLAS
+    # contraction costs nothing measurable.
+    sims = np.einsum("nd,qd->nq", nv, q_mat)  # (rows, n_queries)
+    out_q, out_n, out_c = [], [], []
+    for j in range(len(q_ids)):
+        col = sims[:, j]
+        mask = n_id != q_ids[j] if exclude_self else np.ones_like(n_id, bool)
+        cand_idx = np.nonzero(mask)[0]
+        if not len(cand_idx):
+            continue
+        take = min(k, len(cand_idx))
+        # boundary-tie-complete cut: argpartition alone forwards an
+        # ARBITRARY subset of candidates tied at the k-th cosine, so a
+        # later id-tiebroken merge would rank over a partitioning-
+        # dependent set. Find the k-th value in O(m), keep everything
+        # >= it (ties included), then order the small survivor set by
+        # (-cos, n_id) — the same total order as the global merge.
+        vals = col[cand_idx]
+        if take < len(cand_idx):
+            kth = np.partition(vals, len(vals) - take)[len(vals) - take]
+            cand_idx = cand_idx[vals >= kth]
+        sub_order = np.lexsort((n_id[cand_idx], -col[cand_idx]))
+        top = cand_idx[sub_order[:take]]
+        out_q.append(np.full(take, q_ids[j]))
+        out_n.append(n_id[top])
+        out_c.append(col[top])
+    if not out_q:
+        return (np.zeros(0, np.int64), np.zeros(0, np.int64),
+                np.zeros(0, np.float64))
+    return np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_c)
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -694,16 +754,18 @@ def knn_bruteforce(
 
     The 100 TB shape: queries are collected and BROADCAST as one
     dense float64 matrix; each corpus partition computes a local GEMM
-    and keeps only its own top-k per query, so the shuffle that
-    follows carries k·partitions candidate rows per query — never the
-    full pair grid. (A crossJoin + global window ships every pair
-    through one shuffle: measured 3-10× slower at sf0.1 and unbounded
-    at scale.) Final merge is a window over those candidates.
+    and keeps only its own top-k per query (:func:`cosine_topk`), so
+    the shuffle that follows carries k·partitions candidate rows per
+    query — never the full pair grid. (A crossJoin + global window
+    ships every pair through one shuffle: measured 3-10× slower at
+    sf0.1 and unbounded at scale.) Final merge is a window over those
+    candidates.
 
-    Rank ties broken by neighbor id for determinism.
+    Rank ties broken by neighbor id for determinism. The query
+    broadcast rides the result (``cache.release(result)`` unpersists
+    it).
     """
     import numpy as np
-    import pandas as pd  # noqa: F401
 
     q_rows = queries.select(
         F.col(query_id_col).alias("q_id"), F.col(vec_col).alias("qv")
@@ -713,17 +775,14 @@ def knn_bruteforce(
             [], "q_id long, n_id long, rank int"
         )
     q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.stack(
-        [np.asarray(r["qv"], dtype=np.float64) for r in q_rows]
+    q_mat = unit_rows(
+        np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
     )
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-300)
     bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
     excl = exclude_self
     kk = k
 
     def local_topk(batches):
-        import numpy as np
-
         from ..functions import arrowkit as ak
 
         ids, mat = bc.value
@@ -731,53 +790,13 @@ def knn_bruteforce(
             if b.num_rows == 0:
                 continue
             s = b.schema
-            n_id = ak.i64(b.column(s.get_field_index(id_col)))
-            nv = ak.fixed_matrix(b.column(s.get_field_index(vec_col)))
-            nv = nv / np.maximum(
-                np.linalg.norm(nv, axis=1, keepdims=True), 1e-300
+            q_id, n_id, cos = cosine_topk(
+                ak.i64(b.column(s.get_field_index(id_col))),
+                unit_rows(ak.fixed_matrix(b.column(s.get_field_index(vec_col)))),
+                ids, mat, kk, excl,
             )
-            # einsum (no BLAS dispatch), NOT `nv @ mat.T`: BLAS routes
-            # single-row batches through dgemv, whose reduction order
-            # differs from dgemm's by a last-ulp rounding — so the same
-            # (neighbor, query) pair scored in different partition
-            # layouts produced unequal cos bits, and the id tie-break
-            # below silently became partition-dependent (r13: eleven
-            # singleton partitions each scored an exact-duplicate at
-            # 1.0+2e-16 and outranked ids 1..3). einsum's fixed
-            # ascending-d loop makes cos a pure function of the two
-            # vectors; query sets here are small broadcast sets, so
-            # the non-BLAS contraction costs nothing measurable.
-            sims = np.einsum("nd,qd->nq", nv, mat)  # (batch, n_queries)
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(ids)):
-                col = sims[:, j]
-                mask = n_id != ids[j] if excl else np.ones_like(n_id, bool)
-                cand_idx = np.nonzero(mask)[0]
-                if not len(cand_idx):
-                    continue
-                take = min(kk, len(cand_idx))
-                # boundary-tie-complete local cut: argpartition alone
-                # forwards an ARBITRARY subset of candidates tied at
-                # the k-th cosine, so the final id-tiebroken window
-                # would rank over a partitioning-dependent set. Find
-                # the k-th value in O(m), keep everything >= it (ties
-                # included), then order the small survivor set by
-                # (-cos, n_id) — same total order as the global merge.
-                vals = col[cand_idx]
-                if take < len(cand_idx):
-                    kth = np.partition(vals, len(vals) - take)[len(vals) - take]
-                    cand_idx = cand_idx[vals >= kth]
-                sub_order = np.lexsort((n_id[cand_idx], -col[cand_idx]))
-                top = cand_idx[sub_order[:take]]
-                out_q.append(np.full(take, ids[j]))
-                out_n.append(n_id[top])
-                out_c.append(col[top])
-            if out_q:
-                yield ak.batch(
-                    q_id=np.concatenate(out_q),
-                    n_id=np.concatenate(out_n),
-                    cos=np.concatenate(out_c),
-                )
+            if len(q_id):
+                yield ak.batch(q_id=q_id, n_id=n_id, cos=cos)
 
     from ..sources.io import ensure_min_partitions
 
@@ -785,10 +804,11 @@ def knn_bruteforce(
         corpus.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col))
     ).mapInArrow(local_topk, "q_id long, n_id long, cos double")
     w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
+    return own(
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank")
+        .select("q_id", "n_id", "rank"),
+        bc,
     )
 
 

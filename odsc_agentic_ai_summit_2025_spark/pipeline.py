@@ -47,12 +47,12 @@ class RagPipeline:
 
     def release(self) -> None:
         """Drop the caches this pipeline holds: the extraction cache
-        (when the pipeline ran the extraction), the embedded notes and
-        the FTS index. Every frame stays usable — they are all
-        ``cache()``-backed, so a later ask recomputes them (including
-        the LLM extraction). A session building pipelines in a loop
-        calls this once per pipeline, or executor memory accumulates;
-        mirrors ``CurationPipeline.release``."""
+        (when the pipeline ran the extraction) and the memoized trails
+        views (the retrieval index is driver memory). Every frame stays
+        usable — they are ``cache()``-backed, so a later ask recomputes
+        them (including the LLM extraction). A session building
+        pipelines in a loop calls this once per pipeline, or executor
+        memory accumulates; mirrors ``CurationPipeline.release``."""
         from .cache import release_frame
 
         if self.owns_extracted:

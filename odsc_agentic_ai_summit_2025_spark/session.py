@@ -91,24 +91,37 @@ def get_spark(
     # from a daemon that PRELOADED them (copy-on-write) keeps the
     # fresh-worker semantics at ~10 ms/task. Guarded: only set when
     # this interpreter can import the module (workers share the
-    # interpreter/path in local mode; on a cluster ship the package).
+    # interpreter in local mode; on a cluster ship the package).
     import importlib.util
 
-    if importlib.util.find_spec(
+    extra_conf = dict(extra_conf or {})
+    spec = importlib.util.find_spec(
         "odsc_agentic_ai_summit_2025_spark.daemon_preload"
-    ):
+    )
+    if spec:
         builder = builder.config(
             "spark.python.daemon.module",
             "odsc_agentic_ai_summit_2025_spark.daemon_preload",
+        )
+        # the workers must import the package from wherever this
+        # driver found it: a driver that imported it through a
+        # sys.path insert has no PYTHONPATH entry for it, and without
+        # this every Python stage fails with ModuleNotFoundError
+        from pyspark import SparkConf
+
+        key = "spark.executorEnv.PYTHONPATH"
+        root = os.path.dirname(os.path.dirname(os.path.abspath(spec.origin)))
+        paths = extra_conf.get(key) or SparkConf().get(key) or ""
+        extra_conf[key] = os.pathsep.join(
+            [root] + [p for p in paths.split(os.pathsep) if p and p != root]
         )
     builder = (
         builder
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -100,6 +100,38 @@ def test_neardup_lsh_release(spark, sf_dir):
     assert _n_blocks(spark) == baseline
 
 
+def test_knn_bruteforce_release_unpersists_query_broadcast(
+    spark, monkeypatch
+):
+    """The query broadcast knn_bruteforce creates per call rides the
+    result: cache.release(result) unpersists it, and the result still
+    answers after (the broadcast is re-sent on next use)."""
+    from pyspark import Broadcast
+
+    from odsc_agentic_ai_summit_2025_spark.operators.similarity import (
+        knn_bruteforce,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(12)],
+        "id long, v array<double>",
+    )
+    out = knn_bruteforce(
+        corpus, corpus.filter("id < 2"), "v", "id", "id", k=3
+    )
+    rows = sorted(map(tuple, out.collect()))
+    (bc,) = [h for h in cache.handles(out) if isinstance(h, Broadcast)]
+    unpersisted = []
+    unpersist = Broadcast.unpersist
+    monkeypatch.setattr(
+        Broadcast, "unpersist",
+        lambda self, *a: unpersisted.append(self) or unpersist(self, *a),
+    )
+    cache.release(out)
+    assert unpersisted == [bc]
+    assert sorted(map(tuple, out.collect())) == rows
+
+
 def test_connected_components_releases_rounds(spark):
     """The label-propagation loop must hold at most two rounds of
     checkpoint blocks while running and exactly the final labels

@@ -490,3 +490,65 @@ def test_rag_ask_reraises_vector_branch_exception_unchanged(
     with pytest.raises(LookupError) as info:
         rag.ask(_CATEGORIES_Q)
     assert info.value is err
+
+
+# ---------------------------------------------------------------------------
+# HybridRag's Spark ledger: the retrieval index is built by one job and
+# held on the driver, so an ask runs only the graph branch's jobs
+# ---------------------------------------------------------------------------
+
+
+def _jobs_of(sc, gid, fn):
+    """(Spark jobs ``fn`` ran, by the status tracker's job group, and
+    its result)."""
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid)), out
+
+
+def test_rag_build_runs_one_job_and_adds_only_the_extraction_cache(
+    spark, rag_notes_df
+):
+    from odsc_agentic_ai_summit_2025_spark.pipeline import build_rag_pipeline
+
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(dict(sc._jsc.getPersistentRDDs()))
+
+    # a plan of its own: over rag_notes_df itself the extraction would
+    # be served by inline_pipeline's cache and add no RDD
+    notes = rag_notes_df.filter("record_id > 0")
+    before = persistent()
+    n_jobs, pipe = _jobs_of(
+        sc, "ledger-build", lambda: build_rag_pipeline(spark, notes)
+    )
+    try:
+        # extraction and graph stay lazy: the one job is the index
+        assert n_jobs == 1
+        pipe.rag.ask(_CATEGORIES_Q)
+        assert pipe.extracted.storageLevel.useMemory
+        assert len(persistent() - before) == 1
+    finally:
+        pipe.release()
+    assert not persistent() - before
+
+
+def test_rag_warm_lookup_ask_runs_only_graph_branch_jobs(
+    spark, inline_pipeline, monkeypatch
+):
+    rag = inline_pipeline.rag
+    question = "Which patient is named Rosa Ivy Batz?"
+    warm = rag.ask(question)
+    monkeypatch.setattr(
+        rag, "_graph_branch", lambda q, pruned, entities: ("", [], "")
+    )
+    n_jobs, ans = _jobs_of(
+        spark.sparkContext, "ledger-ask", lambda: rag.ask(question)
+    )
+    assert n_jobs == 0
+    assert ans.context_ids == warm.context_ids
+    assert len(ans.context_ids) == rag.top_k

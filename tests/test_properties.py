@@ -656,3 +656,153 @@ def test_hdr_quantiles_bracket_property(spark, vals, q_e4):
         <= max(0, row["bucket_lo"] >> HDR_MANTISSA_BITS)
     )
     assert row["n_rows"] == len(vals)
+
+
+# ---------------------------------------------------------------------------
+# HybridRag's driver-side retrieval vs the Spark operators it replaces
+# on the serving path: bm25_topk_indexed + knn_bruteforce + rrf_fuse
+# are the reference, compared exactly (ids and order)
+# ---------------------------------------------------------------------------
+
+_RETRIEVAL_WORDS = [
+    "alpha", "Beta,", "gamma", "delta.", "Epsilon", "zeta", "7", "x9",
+]
+_UNKNOWN_WORDS = ["unknownterm", "Qqq", "404"]
+
+
+@st.composite
+def _corpora(draw):
+    """Small notes corpora with exact duplicates: every note is one of
+    a few texts (possibly empty), under unique ids in random order."""
+    texts = draw(st.lists(
+        st.lists(st.sampled_from(_RETRIEVAL_WORDS), max_size=9).map(" ".join),
+        min_size=1, max_size=5,
+    ))
+    picks = draw(st.lists(
+        st.integers(0, len(texts) - 1), min_size=1, max_size=12
+    ))
+    ids = draw(st.lists(
+        st.integers(0, 10_000), min_size=len(picks), max_size=len(picks),
+        unique=True,
+    ))
+    return [(i, texts[p]) for i, p in zip(ids, picks)]
+
+
+def _spark_retrieval(spark, notes_df, queries, top_k):
+    """(bm25 top-20 ids, cosine top-20 ids, RRF top_k ids) per query,
+    from the Spark operators."""
+    from pyspark.sql import functions as F
+
+    from odsc_agentic_ai_summit_2025_spark import cache
+    from odsc_agentic_ai_summit_2025_spark.functions.embedder import (
+        embed,
+        embed_text,
+    )
+    from odsc_agentic_ai_summit_2025_spark.operators import fts, rrf
+    from odsc_agentic_ai_summit_2025_spark.operators import similarity as sim
+
+    vectors = embed(notes_df, "note", "vector")
+    index = fts.build_fts_index(
+        notes_df, "note", "record_id", tokenizer=fts.normalized_tokens
+    )
+    out = []
+    for query in queries:
+        bm = fts.bm25_topk_indexed(
+            index, fts.normalize_query_terms(query), k=20
+        ).withColumnRenamed("doc_id", "record_id")
+        knn = sim.knn_bruteforce(
+            vectors,
+            spark.createDataFrame(
+                [(0, embed_text(query))], "qid long, vector array<double>"
+            ),
+            "vector", "record_id", "qid", k=20, exclude_self=False,
+        )
+        vec = knn.select(F.col("n_id").alias("record_id"), "rank")
+        fused = rrf.rrf_fuse([bm, vec], id_col="record_id", top_k=top_k)
+        out.append(tuple(
+            [r["record_id"] for r in frame.orderBy(rank).collect()]
+            for frame, rank in ((bm, "rank"), (vec, "rank"),
+                                (fused, "rrf_rank"))
+        ))
+        cache.release(knn)
+    return out
+
+
+def _driver_retrieval(index, queries, top_k):
+    from odsc_agentic_ai_summit_2025_spark.operators import fts
+
+    ids = index.ids.tolist()
+    return [
+        (
+            [ids[p] for p in index.bm25_topk(fts.normalize_query_terms(q), 20)],
+            [ids[p] for p in index.cosine_topk(q, 20)],
+            [ids[p] for p in index.search(q, top_k)],
+        )
+        for q in queries
+    ]
+
+
+@settings(**SETTINGS)
+@given(
+    notes=_corpora(),
+    query=st.one_of(
+        st.just(""),
+        st.lists(
+            st.sampled_from(_RETRIEVAL_WORDS + _UNKNOWN_WORDS), max_size=6
+        ).map(" ".join),
+    ),
+    top_k=st.integers(1, 6),
+)
+@example(notes=[(3, "alpha gamma"), (1, "alpha gamma"), (2, "zeta")],
+         query="", top_k=2)
+@example(notes=[(3, "alpha gamma"), (1, "alpha gamma"), (2, "zeta")],
+         query="unknownterm Qqq", top_k=3)
+@example(notes=[(5, "alpha Beta, gamma 7"), (2, "alpha Beta, gamma 7"),
+                (9, "gamma 7 Beta, alpha"), (4, "")],
+         query="alpha beta gamma 7 x9", top_k=4)
+def test_driver_retrieval_matches_spark_operators(spark, notes, query, top_k):
+    """The driver index's BM25 top-20, cosine top-20 and RRF top-k
+    equal the Spark operators' over the same notes, ids and order:
+    exact duplicates tie on both scores and break on id."""
+    from odsc_agentic_ai_summit_2025_spark.llm.rag import NotesIndex
+    from odsc_agentic_ai_summit_2025_spark.schemas import NOTES
+
+    notes_df = spark.createDataFrame(notes, NOTES)
+    assert _driver_retrieval(
+        NotesIndex.build(notes_df), [query], top_k
+    ) == _spark_retrieval(spark, notes_df, [query], top_k)
+
+
+def test_driver_retrieval_matches_spark_operators_on_rag_notes(
+    spark, rag_notes_df
+):
+    from odsc_agentic_ai_summit_2025_spark.llm.rag import NotesIndex
+    from tests.conftest import RAG_NOTES
+
+    queries = ["", "zzqx unknownterm", "Arla Fritsch", "Batz",
+               "Massachusetts allergy penicillin", "influenza vaccine 2022"]
+    queries += [" ".join(note.split()[:4]) for _, note in RAG_NOTES]
+    # every note is in one branch's top-20, so top_k=5 is the whole
+    # fused order and any smaller top_k is its prefix
+    assert _driver_retrieval(
+        NotesIndex.build(rag_notes_df), queries, 5
+    ) == _spark_retrieval(spark, rag_notes_df, queries, 5)
+
+
+@settings(**SETTINGS)
+@given(xs=st.lists(
+    st.floats(min_value=0.0, exclude_min=True, allow_infinity=False),
+    min_size=1, max_size=50,
+))
+@example(xs=[1.0, 2.0, 5e-324, 2.2250738585072014e-308, 1.0000000000000002,
+             0.9999999999999999, 1.7976931348623157e308])
+def test_strict_log_matches_spark_log(spark, xs):
+    """The driver's BM25 idf log is Spark's ``log`` bit for bit."""
+    from pyspark.sql import functions as F
+
+    from odsc_agentic_ai_summit_2025_spark.operators.fts import strict_log
+
+    got = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        F.log("x").alias("l")
+    ).collect()
+    assert [strict_log(x) for x in xs] == [r["l"] for r in got]
