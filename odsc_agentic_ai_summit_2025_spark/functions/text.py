@@ -54,12 +54,21 @@ def char_poly_hash(col: Column, mod: int = HASH_MOD, mult: int = HASH_MULT) -> C
     string_split(x, ''), c -> ascii(c))), (a, b) -> (a*31 + b) %
     1000000007)``. Used as the token hash for MinHash/SimHash and as
     the document fingerprint (SURVEY "document fingerprinting").
+
+    The step is a SQL lambda: the driver builds it with one JVM call,
+    where a Python lambda costs about a hundred Py4J round trips.
     """
-    return F.aggregate(
+    return F.call_function(
+        "aggregate",
         F.split(col, ""),
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(mult) + F.ascii(c)) % F.lit(mod),
+        F.expr(char_poly_step_sql(mod, mult)),
     )
+
+
+def char_poly_step_sql(mod: int = HASH_MOD, mult: int = HASH_MULT) -> str:
+    """The fold step of :func:`char_poly_hash` as a Spark SQL lambda."""
+    return f"(acc, c) -> (acc * {mult} + ascii(c)) % {mod}"
 
 
 # BPE-ish pre-tokenizer (GPT-2 family shape, simplified to the

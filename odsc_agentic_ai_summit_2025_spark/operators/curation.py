@@ -27,6 +27,8 @@ explicit and scalable, per the task's training-pipeline mandate.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,15 +48,18 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     sf0.1 corpus for n=2) while the shifted-zip form is n-1 linear
     array ops (~0.5 s). The ``when`` guard is needed because Spark's
     ``slice`` rejects negative lengths — the guarded branch never
-    evaluates for short docs (conditional short-circuit).
+    evaluates for short docs (conditional short-circuit). The join
+    step is a SQL lambda, one JVM call to build where a Python lambda
+    costs dozens of Py4J round trips.
     """
     m = F.size(toks) - (n - 1)
     out = F.slice(toks, 1, m)
     for j in range(1, n):
-        out = F.zip_with(
+        out = F.call_function(
+            "zip_with",
             out,
             F.slice(toks, j + 1, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
+            F.expr("(a, b) -> concat(a, ' ', b)"),
         )
     return F.when(F.size(toks) >= n, out).otherwise(
         F.array().cast("array<string>")
@@ -598,7 +603,13 @@ def ingest_gate(
     )
     bc = None
     if len(bench_grams) <= literal_max:
-        bench = F.lit(list(bench_grams)).cast("array<string>")
+        # one JSON string literal, not F.lit(list): that makes one
+        # Py4J call per gram (~3k round trips for 700 grams). The
+        # optimizer folds from_json of a literal into the same array
+        # literal, so the executed plan is unchanged.
+        bench = F.from_json(
+            F.lit(json.dumps(list(bench_grams))), "array<string>"
+        )
         contaminated = F.arrays_overlap(g, bench)
     else:
         bc = docs.sparkSession.sparkContext.broadcast(

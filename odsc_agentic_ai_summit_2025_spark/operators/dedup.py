@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import own
-from ..functions.text import char_poly_hash, unique_tokens
+from ..cache import _is_live, own
+from ..functions.text import char_poly_step_sql, unique_tokens
 from ..sources.io import ensure_min_partitions
 
 # ---------------------------------------------------------------------------
@@ -77,8 +77,13 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def token_hashes(text: Column) -> Column:
-    """Distinct-token array → int64 hash array (shingle hashing)."""
-    return F.transform(unique_tokens(text), lambda t: char_poly_hash(t))
+    """Distinct-token array → int64 hash array (shingle hashing):
+    :func:`char_poly_hash` of each token, as one SQL lambda."""
+    return F.call_function(
+        "transform",
+        unique_tokens(text),
+        F.expr(f"t -> aggregate(split(t, ''), 0L, {char_poly_step_sql()})"),
+    )
 
 
 def minhash_signature(text: Column) -> Column:
@@ -868,25 +873,18 @@ def _sig_band_rows(sigs: DataFrame, id_col: str) -> DataFrame:
     """Signature table → ``[id, band_id, bucket_key]`` rows (map-only
     column expressions; the key rendering — '_'-joined decimal
     components per band — matches minhash_band_buckets and the SQL
-    twin exactly)."""
-    bands = [
-        F.struct(
-            F.lit(band).alias("band_id"),
-            F.concat_ws(
-                "_",
-                *[
-                    F.col("sig")
-                    .getItem(band * ROWS_PER_BAND + i)
-                    .cast("string")
-                    for i in range(ROWS_PER_BAND)
-                ],
-            ).alias("bucket_key"),
+    twin exactly). One ``selectExpr``: the driver parses one string
+    instead of building 16 Column trees through Py4J."""
+    bands = ", ".join(
+        f"named_struct('band_id', {band}, 'bucket_key', concat_ws('_', "
+        + ", ".join(
+            f"CAST(sig[{band * ROWS_PER_BAND + i}] AS STRING)"
+            for i in range(ROWS_PER_BAND)
         )
+        + "))"
         for band in range(N_BANDS)
-    ]
-    return sigs.select(
-        id_col, F.explode(F.array(*bands)).alias("_b")
-    ).select(id_col, F.col("_b.band_id"), F.col("_b.bucket_key"))
+    )
+    return sigs.selectExpr(f"`{id_col}`", f"inline(array({bands}))")
 
 
 class NearDupIndex:
@@ -1054,17 +1052,12 @@ def neardup_admit_incremental(
     verify joins move only candidate id pairs plus two 16-long
     signatures each.
     """
-    n_agree = F.aggregate(
-        F.zip_with(
-            F.col("_sa"),
-            F.col("_sb"),
-            lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    verified = (n_agree * 10000 / F.lit(N_HASH)).cast("long") >= F.lit(
-        min_agree_e4
+    # signature agreement of the pair, as one SQL expression
+    verified = F.expr(
+        "CAST(aggregate(zip_with(_sa, _sb, "
+        "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, "
+        f"(acc, v) -> acc + v) * 10000 / {N_HASH} AS BIGINT) "
+        f">= {int(min_agree_e4)}"
     )
 
     new_all = new.select(F.col(id_col), F.col(text_col).alias("_txt"))
@@ -1090,12 +1083,18 @@ def neardup_admit_incremental(
     # multiple joins each (bucket-count trim is a self-join; sigs
     # feed bands AND the verify joins) — without pins the corpus
     # signature build re-ran per consumer (r10: 3x, 16 s -> 4 s at
-    # sf0.1). A caller holding a materialized NearDupIndex passes its
-    # stored band rows instead; those stay CALLER-owned (not in the
-    # own() list), so releasing one admit result cannot yank the
-    # standing index's cache out from under the next delivery.
-    ex_sigs = existing_sigs.persist()
-    _owned_bands: tuple[DataFrame, ...] = ()
+    # sf0.1). The caller's index frames stay CALLER-owned (never in
+    # the own() list), so releasing one admit result cannot yank the
+    # standing index out from under the next delivery. A signature
+    # table that already holds storage (checkpointed or cached) is
+    # read as it is; anything else is pinned through a separate
+    # select("*") frame, which the result owns without inheriting
+    # the caller frame's own() handles.
+    owned: list[DataFrame] = []
+    ex_sigs = existing_sigs
+    if not _is_live(existing_sigs):
+        ex_sigs = existing_sigs.select("*").persist()
+        owned.append(ex_sigs)
     if existing_kept is not None:
         # a caller chaining admissions (q112's admit -> extend ->
         # admit) maintains the trim census incrementally and hands in
@@ -1108,7 +1107,7 @@ def neardup_admit_incremental(
             ex_bands = existing_bands
         else:
             ex_bands = _sig_band_rows(ex_sigs, id_col).persist()
-            _owned_bands = (ex_bands,)
+            owned.append(ex_bands)
         ex_kept = neardup_trimmed(ex_bands, neardup_bucket_census(ex_bands))
     nw_bands = _sig_band_rows(new_sigs, id_col).persist()
     nw_kept = neardup_trimmed(nw_bands, neardup_bucket_census(nw_bands))
@@ -1216,11 +1215,5 @@ def neardup_admit_incremental(
         )
     )
     return own(
-        decided.unionByName(null_rows),
-        new_sigs,
-        ex_sigs,
-        *_owned_bands,
-        nw_bands,
-        existing_sigs,
-        new,
+        decided.unionByName(null_rows), new_sigs, *owned, nw_bands, new
     )

@@ -74,9 +74,10 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     base = df.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
-        F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)).alias(
-            "sum_len"
-        ),
+        F.call_function(
+            "aggregate", toks, F.lit(0).cast("long"),
+            F.expr("(acc, t) -> acc + length(t)"),
+        ).alias("sum_len"),
         stopword_count(F.col(text_col)).cast("long").alias("n_stop"),
     )
     # quality = (1 - stop_ratio) * min(avg_len/10, 1), as exact fixed-point:

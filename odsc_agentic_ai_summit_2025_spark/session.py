@@ -67,6 +67,23 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Compiled codegen classes are cached per JVM, 100 by default.
+        # One curation cycle (build_curation_pipeline + the final
+        # write, then a near-dup admit + index extend) compiles about
+        # 115 + 85 distinct classes, so the default LRU evicted every
+        # class before its next use and each operation recompiled all
+        # of them (12-16 ms per class on a C1-only JVM, 4 vCPUs). The
+        # cache is keyed by the generated source, and a whole-stage
+        # class is named after its codegen stage id by default; under
+        # AQE that id depends on the order in which stages were
+        # planned, so even a cached stage recompiled whenever its
+        # number moved. With 1000 entries and one class name, a
+        # process running that cycle levels off at about 180 compiled
+        # classes, and a warm operation compiles 0-8 (the remainder
+        # are joins AQE re-planned because their inputs finished in
+        # another order).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Fresh python worker per task: with reuse on, Spark 4.1's
         # idle-worker pool intermittently hands later Arrow stages a
         # stale worker whose handshake stalls the whole stage 10-30 s

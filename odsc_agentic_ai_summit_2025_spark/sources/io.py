@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -100,10 +101,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the frame's optimized plan —
-    driver-side only (no job; the same analysis/optimization the later
-    action reuses). None when the estimate is unavailable or absurd
-    (joins without stats default to child-size products)."""
+    """Catalyst's size estimate for the frame's optimized plan, read
+    on the driver. No job runs, but the planning is extra: the frames
+    a caller derives from ``df`` analyse and optimize their own plans
+    again. None when the estimate is unavailable or absurd (joins
+    without stats default to child-size products).
+
+    A ``localCheckpoint`` carries the statistics of the plan it
+    replaced, not of its blocks: the curation pipeline's 490-row
+    ``exact_unique`` checkpoint of a join reads as 1.4 GB, so its
+    MinHash kernel fans out to ``defaultParallelism``. Sizing it from
+    the stored blocks instead (127 KB, one split) measured no gain on
+    the curation benchmark: 8 fewer tasks and 0.07 MB less shuffle per
+    batch, but no fewer jobs and no faster batch, since the kernel
+    then ran on one core."""
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -114,6 +125,44 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     if size <= 0 or size > (1 << 50):
         return None
     return size
+
+
+def _partition_count(plan) -> int | None:
+    """Partition count a physical plan runs with, read from the plan
+    without running a job; None when the plan cannot tell.
+
+    ``df.rdd.getNumPartitions()`` is not that: on an adaptive plan it
+    runs every query stage below the root to settle the final plan,
+    and the real action runs them again. Here an adaptive plan is read
+    as its current plan (before execution, the initial one): a node
+    that knows its output partitioning (an exchange, a checkpoint, a
+    range) gives its count, any other node the count of its one
+    non-broadcast input (a union the sum of its inputs), down to a
+    leaf scan, whose splits are planned without a job. AQE may still
+    coalesce a shuffle below the count read from an initial plan.
+    """
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _partition_count(plan.executedPlan())
+    if name == "InMemoryTableScanExec":
+        # executing the scan would build (and run) the cached plan
+        return _partition_count(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    ch = plan.children()
+    kids = [
+        c
+        for c in (ch.apply(i) for i in range(ch.size()))
+        if c.outputPartitioning().getClass().getSimpleName()
+        != "BroadcastPartitioning"
+    ]
+    if not kids:
+        return plan.execute().getNumPartitions()
+    counts = [_partition_count(c) for c in kids]
+    if None in counts or (len(counts) > 1 and name != "UnionExec"):
+        return None
+    return sum(counts)
 
 
 def ensure_min_partitions(
@@ -128,11 +177,14 @@ def ensure_min_partitions(
     upstream split count; a small or single-row-group parquet file
     pins the whole CPU-bound Python stage to ONE core regardless of
     cluster size. At real scale inputs arrive in many splits and this
-    is a NO-OP (the partition count is read from the lazy RDD plan —
-    no job runs); only an under-split input pays one round-robin
+    is a NO-OP; only an under-split input pays one round-robin
     shuffle, which is narrow data next to the kernel compute it
     unlocks. Kernels here are row-local, so round-robin placement
-    cannot change any result.
+    cannot change any result. The decision runs no Spark job: the
+    size is Catalyst's estimate (:func:`_plan_size_bytes`), the
+    partition count is read from the physical plan
+    (:func:`_partition_count`; a plan that cannot tell is fanned out),
+    and a target of one split returns the frame untouched.
 
     The fan-out target is SIZE-ADAPTIVE (optimization guide §2: derive
     partitioning from input size, not a constant tuned for one mode):
@@ -169,7 +221,13 @@ def ensure_min_partitions(
             else:
                 split_bytes = max(1, int(split_mb * (1 << 20) / cost))
                 min_parts = max(1, min(cap, -(-est // split_bytes)))
-    if df.rdd.getNumPartitions() >= min_parts:
+    if min_parts <= 1:
+        return df
+    try:
+        n = _partition_count(df._jdf.queryExecution().executedPlan())
+    except Py4JError:  # a plan node this Spark build names differently
+        n = None
+    if n is not None and n >= min_parts:
         return df
     return df.repartition(min_parts)
 

@@ -102,3 +102,60 @@ def test_semantic_dedup_collapses_planted_clusters(spark):
         got[100 + i]["keep"] and got[100 + i]["cluster_size"] == 1
         for i in range(40)
     )
+
+
+def test_warm_curation_cycle_compiles_no_codegen_class(
+    spark, sf_dir, tmp_path
+):
+    """The session's codegen cache holds the curation working set: once
+    a cycle (pipeline + final write, then a delivery admitted against a
+    standing index and appended to it) has run, repeating it compiles
+    no new class. With Spark's default 100-entry cache every repeat
+    recompiled most of them. AQE is off here: with it, a join may be
+    re-planned differently when its inputs finish in another order,
+    and such a variant is a new class, not an eviction."""
+    from odsc_agentic_ai_summit_2025_spark.cache import release
+    from odsc_agentic_ai_summit_2025_spark.operators import dedup as dd
+    from odsc_agentic_ai_summit_2025_spark.operators.index_io import (
+        neardup_index_add,
+    )
+
+    docs = read_table(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    corpus = docs.filter(F.col("doc_id") % 97 != 0)
+    standing = corpus.filter(F.col("doc_id") % 3 != 0)
+    delivery = corpus.filter(F.col("doc_id") % 3 == 0)
+    index = dd.build_neardup_index(
+        standing, "text", "doc_id",
+        sigs=dd.minhash_signatures(standing, "text", "doc_id")
+        .localCheckpoint(eager=True),
+    )
+    index.bands = index.bands.localCheckpoint(eager=True)
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = compiles.METRIC_COMPILATION_TIME()
+
+    def cycle() -> int:
+        n0 = compiles.getCount()
+        p = build_curation_pipeline(corpus, bench)
+        p.final.write.mode("overwrite").parquet(str(tmp_path / "final"))
+        p.release()
+        verdict = dd.neardup_admit_incremental(
+            index.sigs, delivery, "text", "doc_id",
+            existing_bands=index.bands,
+        )
+        admitted = delivery.join(
+            verdict.filter(F.col("admitted")).select("doc_id"), "doc_id"
+        )
+        delta = neardup_index_add(index, admitted, "text").delta_bands
+        delta.count()
+        release(verdict, delta)
+        return compiles.getCount() - n0
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        cycle()
+        assert cycle() == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)

@@ -155,6 +155,54 @@ def test_ensure_min_partitions_noop_when_wide(spark):
     assert ensure_min_partitions(narrow, 4).rdd.getNumPartitions() == 4
 
 
+def _jobs_started(sc, group, fn):
+    """(Spark jobs ``fn`` started, by job id from the status tracker
+    once the listener bus has delivered every event, and its result)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_ensure_min_partitions_runs_no_job(spark, tmp_path):
+    """The fan-out decision is read from the plan: on an adaptive
+    join input it starts no job (``df.rdd`` would run the join's query
+    stages), and a one-split target returns the frame untouched."""
+    from odsc_agentic_ai_summit_2025_spark.sources.io import (
+        ensure_min_partitions,
+    )
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "ids")
+    spark.range(200).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+
+    def join():  # a fresh frame: one that has run holds its final plan
+        return scan.join(
+            spark.range(0, 200, 3).groupBy("id").count(), "id", "left_anti"
+        )
+
+    plan = join()._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    want = sorted(r.id for r in join().collect())
+
+    n_jobs, fanned = _jobs_started(
+        sc, "emp-join", lambda: ensure_min_partitions(join(), 3)
+    )
+    assert n_jobs == 0
+    assert fanned.rdd.getNumPartitions() >= 3
+    assert sorted(r.id for r in fanned.collect()) == want
+
+    for df in (join(), scan):
+        n_jobs, same = _jobs_started(
+            sc, "emp-one", lambda: ensure_min_partitions(df, 1)
+        )
+        assert n_jobs == 0 and same is df
+
+
 def test_chunking_covers_all_tokens(spark, sf_dir):
     """Every token position appears in ≥1 chunk; chunk sizes ≤ 32."""
     from odsc_agentic_ai_summit_2025_spark.plans.extended2 import (

@@ -520,3 +520,37 @@ def test_semantic_decontam_stream_parity(spark, sf_dir, tmp_path):
 
     release_frame(q.benchHandle)
     release_frame(bench)
+
+
+def test_ingest_gate_build_calls_do_not_grow_with_gram_count(
+    spark, monkeypatch
+):
+    """The literal gram set is ONE JSON string literal: building the
+    gate makes as many Py4J calls for 1,000 grams as for 10 (a
+    ``F.lit(list)`` array makes one call per gram). Py4J's own
+    release commands for garbage-collected Java handles are not
+    counted: when they run depends on the Python GC."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    docs = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return send(command, *args, **kwargs)
+
+    def build_calls(n: int) -> int:
+        grams = [f"w{i} x{i} y{i}" for i in range(n)]
+        ingest_gate(docs, grams, "text", "doc_id")  # warm
+        calls.clear()
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            ingest_gate(docs, grams, "text", "doc_id")
+        finally:
+            monkeypatch.undo()
+        return len(calls)
+
+    assert build_calls(10) == build_calls(1000)

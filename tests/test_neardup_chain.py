@@ -139,3 +139,38 @@ def test_census_equivalence_debug_check(spark, sf_dir, monkeypatch):
     assert ok.count() >= 0
     with pytest.raises(AssertionError, match="census does not equal"):
         dd.neardup_trimmed(bands, dd.neardup_bucket_census(other))
+
+
+def test_releasing_a_verdict_keeps_the_standing_index(spark, sf_dir):
+    """The caller's index stays caller-owned: releasing one admit
+    verdict must not free the standing index's checkpoint blocks (a
+    second admit then failed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
+    and a materialized index is read as it is, not persisted again."""
+    from odsc_agentic_ai_summit_2025_spark.cache import (
+        handles,
+        release,
+        release_frame,
+    )
+
+    corpus, delivery = _corpus_delivery(spark, sf_dir)
+    sigs = dd.minhash_signatures(corpus, "text", "doc_id").localCheckpoint(
+        eager=True
+    )
+    idx = dd.build_neardup_index(corpus, "text", "doc_id", sigs=sigs)
+    idx.bands = idx.bands.localCheckpoint(eager=True)
+
+    def admit():
+        return dd.neardup_admit_incremental(
+            idx.sigs, delivery, "text", "doc_id", existing_bands=idx.bands
+        )
+
+    first = admit()
+    assert not {id(h) for h in handles(first)} & {id(idx.sigs), id(idx.bands)}
+    assert not idx.sigs.storageLevel.useMemory
+    rows = _rows(first)
+    release(first)
+    second = admit()
+    assert _rows(second) == rows
+    release(second)
+    release_frame(idx.sigs)
+    release_frame(idx.bands)

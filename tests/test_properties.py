@@ -151,6 +151,27 @@ def test_char_poly_hash_np_matches_expression(spark, toks):
 
 
 @settings(**SETTINGS)
+@given(grams=st.lists(st.text(max_size=12), max_size=20))
+@example(grams=[])
+@example(grams=["\U0001f600 \u00e9\u0301", "\x00", "'\"\\", "\u2028"])
+def test_gram_set_json_literal_equals_lit_list(spark, grams):
+    """ingest_gate's gram-set literal: ``from_json`` of one JSON string
+    equals the ``F.lit(list)`` array for any Unicode gram list, and the
+    optimizer folds it to a plain literal."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    df = spark.range(1).select(
+        F.lit(list(grams)).cast("array<string>").alias("lit"),
+        F.from_json(F.lit(json.dumps(grams)), "array<string>").alias("json"),
+    )
+    row = df.first()
+    assert row["json"] == row["lit"] == grams
+    assert "from_json" not in str(df._jdf.queryExecution().optimizedPlan())
+
+
+@settings(**SETTINGS)
 @given(toks=token_strategy)
 def test_char_poly_hash_arrow_matches_np(toks):
     """The Arrow-buffer fold (byte gather over the string column's
